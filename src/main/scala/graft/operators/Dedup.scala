@@ -299,35 +299,17 @@ object Dedup {
   private[graft] val LshAuditSample = 256L
 
   /** Staleness dials (compile-time defaults; callers owning a policy
-    * pass overrides — the s29/s30 precedence discipline). Coverage is
+    * may override the coverage floor — the s29/s30 precedence
+    * discipline). Coverage is
     * meta `nd` vs a live corpus-stripe count; band defects are
     * sampled docs whose persisted row count differs from the
     * geometry's band count (a torn/partial write). */
   private[graft] val LshMinCoverage = 0.98
   private[graft] val LshMaxBandDefect = 0.02
 
-  private def lshPath(d: String, table: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_$table-" +
-      Integer.toHexString(d.hashCode)
-
-  private def lshSave(s: SparkSession, d: String, dfx: DataFrame,
-      table: String): Unit =
-    dfx.write.mode("overwrite").option("path", lshPath(d, table))
-      .saveAsTable(table)
-
-  private def refreshLshTables(s: SparkSession): Unit =
-    Seq("d10_lsh_bands", "d10_lsh_hot", "d10_lsh_meta").foreach { t =>
-      try s.catalog.refreshTable(t)
-      catch { case _: Exception => () } // missing table: nothing cached
-    }
-
-  private def lshPrevGen(s: SparkSession): Long =
-    try {
-      refreshLshTables(s)
-      val mt = s.table("d10_lsh_meta")
-      if (mt.columns.contains("gen")) mt.head().getAs[Long]("gen")
-      else 0L
-    } catch { case _: Exception => 0L }
+  private[graft] val LshTower = IndexTower("lsh",
+    Seq("d10_lsh_meta", "d10_lsh_bands", "d10_lsh_hot"),
+    Seq("nd", "hashes", "bands"), LshMetaSchemaVer)
 
   /** The historical-corpus stripe the index covers (d10's split:
     * doc_id % 5 == 0 is "today's ingest", the rest is the corpus). */
@@ -349,7 +331,7 @@ object Dedup {
   private[graft] def persistLshIndex(s: SparkSession, d: String,
       docGate: org.apache.spark.sql.Column = lit(true)): Unit = {
     val (hashes, bands) = minhashGeometry(s)
-    lshSave(s, d,
+    IndexTower.save(d,
       minhashBands(
         minhashSigs(cappedShingles(s, d)
           .filter(col("doc_id") % 5 =!= 0).filter(docGate), hashes),
@@ -359,48 +341,23 @@ object Dedup {
     // (st15) caps each micro-batch's shingles against it, so the
     // corpus is never re-tokenized at serve; derived corpus-wide,
     // exactly as cappedShingles derives it for the batch passes
-    lshSave(s, d, hotShingles(s, d), "d10_lsh_hot")
+    IndexTower.save(d, hotShingles(s, d), "d10_lsh_hot")
     val nd = lshStripe(s, d).filter(docGate).count()
     import s.implicits._
-    lshSave(s, d,
-      Seq((nd, hashes, bands, d, LshMetaSchemaVer, lshPrevGen(s) + 1L))
-        .toDF("nd", "hashes", "bands", "corpus_dir", "schema_ver",
-          "gen"),
-      "d10_lsh_meta")
+    LshTower.stampMeta(s, d,
+      Seq((nd, hashes, bands)).toDF("nd", "hashes", "bands"))
   }
 
-  /** The index's GENERATION stamp alone — the 1-row freshness probe
-    * (the [[graft.operators.Similarity]] `loadPqMetaGen` twin). */
-  private[graft] def loadLshMetaGen(s: SparkSession): Long = {
-    refreshLshTables(s)
-    s.table("d10_lsh_meta").head().getAs[Long]("gen")
-  }
+  private[graft] def loadLshMetaGen(s: SparkSession): Long = LshTower.gen(s)
 
   /** Load the persisted band index when one is fresh for this corpus
     * AND this session's geometry dials, else build + persist. The
-    * fingerprint is the exact corpus-dir string, the schema version,
-    * and the (hashes, bands) geometry — the same field-by-field
-    * discipline as `ensurePqIndex`/`ensureLexIndex`. */
+    * fingerprint adds the (hashes, bands) geometry to
+    * [[IndexTower.ensure]]'s tables/dir/schema checks. */
   private[graft] def ensureLshIndex(s: SparkSession, d: String): DataFrame = {
-    val cat = s.sessionState.catalog
-    def exists(t: String) = cat.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    refreshLshTables(s)
     val (hashes, bands) = minhashGeometry(s)
-    val metaCols =
-      Set("nd", "hashes", "bands", "corpus_dir", "schema_ver", "gen")
-    val fresh = exists("d10_lsh_bands") && exists("d10_lsh_hot") &&
-      exists("d10_lsh_meta") && {
-      val mt = s.table("d10_lsh_meta")
-      metaCols.subsetOf(mt.columns.toSet) && {
-        val m = mt.head()
-        m.getAs[String]("corpus_dir") == d &&
-          m.getAs[Int]("schema_ver") == LshMetaSchemaVer &&
-          m.getAs[Int]("hashes") == hashes &&
-          m.getAs[Int]("bands") == bands
-      }
-    }
-    if (!fresh) persistLshIndex(s, d)
+    LshTower.ensure(s, d, Seq("hashes" -> hashes, "bands" -> bands))(
+      persistLshIndex(s, d))
     s.table("d10_lsh_bands")
   }
 
@@ -422,46 +379,26 @@ object Dedup {
     * recheck, and count drift lands in coverage. One row out;
     * `rebuild_due` fires on any of the three dials. */
   private[graft] def auditLshCoverage(s: SparkSession, d: String,
-      minCoverageOverride: Option[Double] = None,
-      maxBandDefectOverride: Option[Double] = None): DataFrame = {
-    refreshLshTables(s)
+      minCoverageOverride: Option[Double] = None): DataFrame = {
+    LshTower.refresh(s)
     val m = s.table("d10_lsh_meta").head()
     val ndIndex = m.getAs[Long]("nd")
     val (hashes, bands) = minhashGeometry(s)
     val geomOk = m.getAs[Int]("hashes") == hashes &&
       m.getAs[Int]("bands") == bands
     val minCov = minCoverageOverride.getOrElse(LshMinCoverage)
-    val maxDef = maxBandDefectOverride.getOrElse(LshMaxBandDefect)
     val stripe = lshStripe(s, d)
     val ndCorpus = stripe.count()
-    val thresh = (LshAuditSample * 4294967296L - 1L) /
-      math.max(1L, ndCorpus) + 1L
-    val sample = stripe
-      .filter(conv(substring(md5(concat(lit("lsha:"),
-        col("doc_id").cast("string"))), 1, 8), 16, 10).cast("long")
-        < lit(thresh))
-      .select(col("doc_id"))
-    s.table("d10_lsh_bands")
+    val sample = IndexTower.auditSample(stripe, "lsha:", LshAuditSample,
+      ndCorpus).select(col("doc_id"))
+    IndexTower.auditVerdict(s.table("d10_lsh_bands")
       .join(broadcast(sample), Seq("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("nrows"))
       .agg(count(lit(1)).as("n_sample"),
         coalesce(sum(when(col("nrows") =!= bands, 1L).otherwise(0L)),
-          lit(0L)).as("band_defects"))
-      .select(lit(ndIndex).as("nd_index"),
-        lit(ndCorpus).as("nd_corpus"),
-        col("n_sample"), col("band_defects"),
-        (lit(ndIndex).cast("double") / lit(ndCorpus).cast("double"))
-          .as("coverage"),
-        coalesce(col("band_defects").cast("double")
-          / nullif(col("n_sample").cast("double"), lit(0.0)), lit(0.0))
-          .as("defect_frac"),
-        lit(geomOk).as("geom_ok"),
-        ((lit(ndIndex).cast("double") / lit(ndCorpus).cast("double"))
-            < lit(minCov)
-          || coalesce(col("band_defects").cast("double")
-            / nullif(col("n_sample").cast("double"), lit(0.0)),
-            lit(0.0)) > lit(maxDef)
-          || lit(!geomOk)).as("rebuild_due"))
+          lit(0L)).as("band_defects")),
+      ndIndex, ndCorpus, "band_defects", "defect_frac", minCov,
+      LshMaxBandDefect, Some(geomOk))
   }
 
   /** NIGHTLY LSH MAINTENANCE — `maintainPqIndex`'s shape for the
@@ -470,13 +407,9 @@ object Dedup {
     * probe ([[ensureLshIndex]]) reads the fresh index. Returns
     * whether a rebuild ran. */
   private[graft] def maintainLshIndex(s: SparkSession, d: String,
-      minCoverageOverride: Option[Double] = None,
-      maxBandDefectOverride: Option[Double] = None): Boolean = {
-    val due = auditLshCoverage(s, d, minCoverageOverride,
-      maxBandDefectOverride).head().getAs[Boolean]("rebuild_due")
-    if (due) persistLshIndex(s, d)
-    due
-  }
+      minCoverageOverride: Option[Double] = None): Boolean =
+    IndexTower.rebuildIfDue(auditLshCoverage(s, d, minCoverageOverride))(
+      persistLshIndex(s, d))
 
   /** d10's delta-vs-corpus probe + exact-jaccard verify tail, served
     * from a given band index frame (d10 passes the ensured tower;
@@ -908,7 +841,7 @@ object Dedup {
       (s, d) => {
         persistLshIndex(s, d, col("doc_id") % 7 =!= 0)
         maintainLshIndex(s, d)
-        refreshLshTables(s)
+        LshTower.refresh(s)
         deltaDedupServe(s, d, s.table("d10_lsh_bands"))
       },
       Some(d10OracleSql)),

@@ -22,7 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     recheck — m10 proves the loop load-bearing).
   *
   * ENSURE catches fingerprint staleness (wrong corpus dir, re-dialed
-  * geometry/serving confs, schema drift, a partial scope) and builds
+  * geometry/serving confs, schema drift, a partial scope, a missing
+  * table) and builds
   * when the tower does not exist yet — first-run robustness; the
   * AUDIT catches content staleness the fingerprint cannot see (the
   * corpus changed under an index whose meta still matches). Every
@@ -33,13 +34,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * no restart (`PqMaintainSpec` / `StreamLexRefreshSpec` prove the
   * mid-stream swap per tower).
   *
-  * DIAL PRECEDENCE (uniform across towers): an explicit override
-  * argument > the session conf (vector tower only:
-  * `spark.graft.minCandRecall` / `spark.graft.maxRecallDrift`) > the
-  * compiled default (`LexMinCoverage`/`LexMaxDlMismatch`,
-  * `LshMinCoverage`/`LshMaxBandDefect`). An unset vector dial
-  * disables that trigger (-1), matching `maintainPqIndex` run
-  * standalone.
+  * DIAL PRECEDENCE: each tower's floor dial takes an explicit
+  * override argument (the recall floor on the vector tower, the
+  * coverage floor on the others) > the session conf (vector tower
+  * only: `spark.graft.minCandRecall` / `spark.graft.maxRecallDrift`)
+  * > the compiled default (`LexMinCoverage`/`LexMaxDlMismatch`,
+  * `LshMinCoverage`/`LshMaxBandDefect`, `PhMinCoverage`/
+  * `PhMaxDefect`). The mismatch/defect ceilings are compiled only. An
+  * unset vector dial disables that trigger (-1), matching
+  * `maintainPqIndex` run standalone.
   *
   * COMPACTION is deliberately NOT in this loop: `compactPqCodes`
   * (s26) and `compactLexIndex` (s23) are layout-only OPTIMIZE passes
@@ -53,44 +56,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `audit_due` is the content-audit verdict alone. */
 object Maintenance {
 
-  private def genOf(read: => Long): Long =
-    try read catch { case _: Exception => 0L } // tower not built yet
-
   def maintainIndexes(s: SparkSession, d: String,
       pqFloorOverride: Option[Double] = None,
-      pqDriftOverride: Option[Double] = None,
       lexMinCoverageOverride: Option[Double] = None,
-      lexMaxDlMismatchOverride: Option[Double] = None,
       lshMinCoverageOverride: Option[Double] = None,
-      lshMaxBandDefectOverride: Option[Double] = None,
-      phMinCoverageOverride: Option[Double] = None,
-      phMaxDefectOverride: Option[Double] = None): DataFrame = {
-    val pqG0 = genOf(Similarity.loadPqMetaGen(s))
-    val lexG0 = genOf(Similarity.loadLexMetaGen(s))
-    val lshG0 = genOf(Dedup.loadLshMetaGen(s))
-    val phG0 = genOf(Multimodal.loadPhMetaGen(s))
-    Similarity.ensurePqIndex(s, d)
-    Similarity.ensureLexIndex(s, d)
-    Dedup.ensureLshIndex(s, d)
-    Multimodal.ensurePhashIndex(s, d)
-    val pqDue = Similarity.maintainPqIndex(s, d,
-      pqFloorOverride, pqDriftOverride)
-    val lexDue = Similarity.maintainLexIndex(s, d,
-      lexMinCoverageOverride, lexMaxDlMismatchOverride)
-    val lshDue = Dedup.maintainLshIndex(s, d,
-      lshMinCoverageOverride, lshMaxBandDefectOverride)
-    val phDue = Multimodal.maintainPhashIndex(s, d,
-      phMinCoverageOverride, phMaxDefectOverride)
-    val pqG1 = Similarity.loadPqMetaGen(s)
-    val lexG1 = Similarity.loadLexMetaGen(s)
-    val lshG1 = Dedup.loadLshMetaGen(s)
-    val phG1 = Multimodal.loadPhMetaGen(s)
+      phMinCoverageOverride: Option[Double] = None): DataFrame = {
+    // (tower, ensure, audit → rebuild when due)
+    val towers: Seq[(IndexTower, () => Any, () => Boolean)] = Seq(
+      (Similarity.PqTower, () => Similarity.ensurePqIndex(s, d),
+        () => Similarity.maintainPqIndex(s, d, pqFloorOverride)),
+      (Similarity.LexTower, () => Similarity.ensureLexIndex(s, d),
+        () => Similarity.maintainLexIndex(s, d, lexMinCoverageOverride)),
+      (Dedup.LshTower, () => Dedup.ensureLshIndex(s, d),
+        () => Dedup.maintainLshIndex(s, d, lshMinCoverageOverride)),
+      (Multimodal.PhTower, () => Multimodal.ensurePhashIndex(s, d),
+        () => Multimodal.maintainPhashIndex(s, d, phMinCoverageOverride)))
+    val rows = towers.map { case (tower, ensure, maintain) =>
+      val g0 = tower.prevGen(s)
+      ensure()
+      val due = maintain()
+      val g1 = tower.gen(s)
+      (tower.name, g1 != g0, due, g1)
+    }
     import s.implicits._
-    Seq(
-      ("vector", pqG1 != pqG0, pqDue, pqG1),
-      ("lexical", lexG1 != lexG0, lexDue, lexG1),
-      ("lsh", lshG1 != lshG0, lshDue, lshG1),
-      ("phash", phG1 != phG0, phDue, phG1))
-      .toDF("tower", "rebuilt", "audit_due", "gen")
+    rows.toDF("tower", "rebuilt", "audit_due", "gen")
   }
 }

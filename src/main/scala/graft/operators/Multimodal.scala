@@ -503,7 +503,7 @@ object Multimodal {
     // ×100 luck tail, SHED at the mechanism. The r19 band probe
     // root-caused the tail to hamming-space crowding by short-doc
     // signatures; the documented "wider grid" escape was then probed
-    // (M08WideGridProbe) and REFUTED: 95% of the ×100 media stripe is
+    // (PLANS.md r19 item 7) and REFUTED: 95% of the ×100 media stripe is
     // sub-grid (fewer payload blocks than grid positions), a wider
     // grid leaves every sub-grid signature bit-identical while its
     // coupled hamming threshold LOOSENS (bands−1 = 3 at 120 bits) —
@@ -572,7 +572,7 @@ object Multimodal {
       (s, d) => {
         persistPhashIndex(s, d, col("doc_id") % 7 =!= 0)
         maintainPhashIndex(s, d)
-        refreshPhTables(s)
+        PhTower.refresh(s)
         val m = s.table("m09_ph_meta").head()
         twoTierGateBatch(
           new Tables(s, d).documents
@@ -754,27 +754,9 @@ object Multimodal {
   private val nbExpr =
     greatest(lit(1), expr("cast((length(text) + 15) div 16 as int)"))
 
-  private def phPath(d: String, table: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_$table-" +
-      Integer.toHexString(d.hashCode)
-
-  private def phSave(dfx: DataFrame, d: String, table: String): Unit =
-    dfx.write.mode("overwrite").option("path", phPath(d, table))
-      .saveAsTable(table)
-
-  private[graft] def refreshPhTables(s: SparkSession): Unit =
-    Seq("m09_ph_bands", "m09_ph_cks", "m09_ph_meta").foreach { t =>
-      try s.catalog.refreshTable(t)
-      catch { case _: Exception => () } // missing table: nothing cached
-    }
-
-  private def phPrevGen(s: SparkSession): Long =
-    try {
-      refreshPhTables(s)
-      val mt = s.table("m09_ph_meta")
-      if (mt.columns.contains("gen")) mt.head().getAs[Long]("gen")
-      else 0L
-    } catch { case _: Exception => 0L }
+  private[graft] val PhTower = IndexTower("phash",
+    Seq("m09_ph_meta", "m09_ph_bands", "m09_ph_cks"),
+    Seq("nd", "floor", "bands"), PhMetaSchemaVer)
 
   /** The historical-corpus media stripe the tower covers (st24's
     * split: doc_id % 5 == 0 is "today's ingest"). */
@@ -799,47 +781,23 @@ object Multimodal {
     val floor = entropyFloorBlocks(nd)
     val tierDocs = stripe.filter(nbExpr >= floor)
     val bands = Dedup.adaptiveSimHashBands(PHashBits, tierDocs.count())
-    phSave(bandedPhashOfSigs(perceptualHashesOf(tierDocs), bands),
-      d, "m09_ph_bands")
-    phSave(stripe.filter(nbExpr < floor)
-      .select(col("doc_id"), md5(col("text")).as("ck")),
-      d, "m09_ph_cks")
+    IndexTower.save(d, bandedPhashOfSigs(perceptualHashesOf(tierDocs),
+      bands), "m09_ph_bands")
+    IndexTower.save(d, stripe.filter(nbExpr < floor)
+      .select(col("doc_id"), md5(col("text")).as("ck")), "m09_ph_cks")
     import s.implicits._
-    phSave(Seq((nd, floor, bands, d, PhMetaSchemaVer, phPrevGen(s) + 1L))
-      .toDF("nd", "floor", "bands", "corpus_dir", "schema_ver", "gen"),
-      d, "m09_ph_meta")
-  }
-
-  /** The tower's GENERATION stamp alone — the 1-row freshness
-    * probe. */
-  private[graft] def loadPhMetaGen(s: SparkSession): Long = {
-    refreshPhTables(s)
-    s.table("m09_ph_meta").head().getAs[Long]("gen")
+    PhTower.stampMeta(s, d,
+      Seq((nd, floor, bands)).toDF("nd", "floor", "bands"))
   }
 
   /** Load the persisted gate index when one is fresh for this
-    * corpus, else build + persist. The fingerprint is the exact
-    * corpus-dir string and the schema version — there are no session
-    * dials here (geometry is count-derived); count-driven geometry
-    * drift is [[auditPhashCoverage]]'s job. */
+    * corpus, else build + persist. [[IndexTower.ensure]]'s
+    * tables/dir/schema checks are the whole fingerprint — there are no
+    * session dials here (geometry is count-derived); count-driven
+    * geometry drift is [[auditPhashCoverage]]'s job. */
   private[graft] def ensurePhashIndex(s: SparkSession,
       d: String): DataFrame = {
-    val cat = s.sessionState.catalog
-    def exists(t: String) = cat.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    refreshPhTables(s)
-    val metaCols =
-      Set("nd", "floor", "bands", "corpus_dir", "schema_ver", "gen")
-    val fresh = exists("m09_ph_bands") && exists("m09_ph_cks") &&
-      exists("m09_ph_meta") && {
-      val mt = s.table("m09_ph_meta")
-      metaCols.subsetOf(mt.columns.toSet) && {
-        val m = mt.head()
-        m.getAs[String]("corpus_dir") == d &&
-          m.getAs[Int]("schema_ver") == PhMetaSchemaVer
-      }
-    }
-    if (!fresh) persistPhashIndex(s, d)
+    PhTower.ensure(s, d, Nil)(persistPhashIndex(s, d))
     s.table("m09_ph_bands")
   }
 
@@ -858,34 +816,28 @@ object Multimodal {
     *     the exact tier directly.
     * One row out; `rebuild_due` fires on any dial. */
   private[graft] def auditPhashCoverage(s: SparkSession, d: String,
-      minCoverageOverride: Option[Double] = None,
-      maxDefectOverride: Option[Double] = None): DataFrame = {
-    refreshPhTables(s)
+      minCoverageOverride: Option[Double] = None): DataFrame = {
+    PhTower.refresh(s)
     val m = s.table("m09_ph_meta").head()
     val ndIndex = m.getAs[Long]("nd")
     val metaFloor = m.getAs[Int]("floor")
     val metaBands = m.getAs[Int]("bands")
     val minCov = minCoverageOverride.getOrElse(PhMinCoverage)
-    val maxDef = maxDefectOverride.getOrElse(PhMaxDefect)
     val stripe = phStripe(s, d)
     val ndCorpus = stripe.count()
     val liveFloor = entropyFloorBlocks(ndCorpus)
     val liveBands = Dedup.adaptiveSimHashBands(PHashBits,
       stripe.filter(nbExpr >= liveFloor).count())
     val geomOk = metaFloor == liveFloor && metaBands == liveBands
-    val thresh = (PhAuditSample * 4294967296L - 1L) /
-      math.max(1L, ndCorpus) + 1L
-    val sample = stripe
-      .filter(conv(substring(md5(concat(lit("pha:"),
-        col("doc_id").cast("string"))), 1, 8), 16, 10).cast("long")
-        < lit(thresh))
+    val sample = IndexTower.auditSample(stripe, "pha:", PhAuditSample,
+        ndCorpus)
       .select(col("doc_id"), nbExpr.as("nb"),
         md5(col("text")).as("ck_live"))
     val bandRows = s.table("m09_ph_bands")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("nrows"))
     val cks = s.table("m09_ph_cks")
       .select(col("doc_id"), col("ck"))
-    sample
+    IndexTower.auditVerdict(sample
       .join(bandRows, Seq("doc_id"), "left")
       .join(cks, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -894,35 +846,18 @@ object Multimodal {
           .otherwise(col("ck").isNull || col("ck") =!= col("ck_live"))
           .cast("int").as("defect"))
       .agg(count(lit(1)).as("n_sample"),
-        coalesce(sum(col("defect")), lit(0)).cast("long").as("defects"))
-      .select(lit(ndIndex).as("nd_index"),
-        lit(ndCorpus).as("nd_corpus"),
-        col("n_sample"), col("defects"),
-        (lit(ndIndex).cast("double") / lit(ndCorpus).cast("double"))
-          .as("coverage"),
-        coalesce(col("defects").cast("double")
-          / nullif(col("n_sample").cast("double"), lit(0.0)), lit(0.0))
-          .as("defect_frac"),
-        lit(geomOk).as("geom_ok"),
-        ((lit(ndIndex).cast("double") / lit(ndCorpus).cast("double"))
-            < lit(minCov)
-          || coalesce(col("defects").cast("double")
-            / nullif(col("n_sample").cast("double"), lit(0.0)),
-            lit(0.0)) > lit(maxDef)
-          || lit(!geomOk)).as("rebuild_due"))
+        coalesce(sum(col("defect")), lit(0)).cast("long").as("defects")),
+      ndIndex, ndCorpus, "defects", "defect_frac", minCov, PhMaxDefect,
+      Some(geomOk))
   }
 
   /** NIGHTLY PHASH MAINTENANCE — audit → rebuild-when-due with a
     * generation bump picked up by the next [[ensurePhashIndex]]
     * probe. Returns whether a rebuild ran. */
   private[graft] def maintainPhashIndex(s: SparkSession, d: String,
-      minCoverageOverride: Option[Double] = None,
-      maxDefectOverride: Option[Double] = None): Boolean = {
-    val due = auditPhashCoverage(s, d, minCoverageOverride,
-      maxDefectOverride).head().getAs[Boolean]("rebuild_due")
-    if (due) persistPhashIndex(s, d)
-    due
-  }
+      minCoverageOverride: Option[Double] = None): Boolean =
+    IndexTower.rebuildIfDue(auditPhashCoverage(s, d, minCoverageOverride))(
+      persistPhashIndex(s, d))
 
   /** One video-stripe count per (dir, JVM) — feeds the adaptive band
     * geometry (the [[Dedup.docCount]] discipline). */
@@ -940,7 +875,7 @@ object Multimodal {
     * (one md5 bit per block; empty grid positions carry none), so
     * between sub-floor docs hamming proximity is EXPECTED by chance
     * once ~n²/2 pairs sample a 2^nb space — the measured ×100
-    * mechanism (M08WideGridProbe: grid-FILLING docs produced zero
+    * mechanism (PLANS.md r19 item 7: grid-FILLING docs produced zero
     * luck pairs; widening the grid changed no sub-grid signature and
     * only loosened the threshold). Same occupancy discipline as
     * [[Dedup.adaptiveSimHashBands]], one level up: bands size the

@@ -672,25 +672,14 @@ object Similarity {
     * (the O(|delta|) maintenance proof: base files byte-identical
     * across the append). */
   private[graft] def s17IndexPath(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_s17-" +
-      Integer.toHexString(d.hashCode)
-
-  private def deleteDir(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
-  }
+    IndexTower.path(d, "s17")
 
   private[graft] def s17BuildBase(s: SparkSession, d: String): Unit = {
     // idempotent across lifecycles: clear any compaction generation a
     // previous run left behind (the live table may point at one)
     s.sql("DROP TABLE IF EXISTS s17_corpus_idx")
-    deleteDir(s"${s17IndexPath(d)}-a")
-    deleteDir(s"${s17IndexPath(d)}-b")
+    IndexTower.deleteDir(s"${s17IndexPath(d)}-a")
+    IndexTower.deleteDir(s"${s17IndexPath(d)}-b")
     val e = vecs(s, d).withColumn("bucket", expr(bucketExpr))
     // last night's index: the even stripe minus today's arrivals
     e.filter(col("vec_id") % 2 === 0 && col("vec_id") % 10 =!= 0)
@@ -705,67 +694,17 @@ object Similarity {
     * [[s17AppendDelta]] lands one new small file per (task, bucket),
     * so a year of deltas reads as hundreds of tiny files per bucket.
     * Compaction bin-packs each bucket back to ONE file WITHOUT a
-    * shuffle: with auto-bucketed-scan forced on, the read of the
-    * bucketed table is one partition per bucket, so the bucketed
-    * rewrite streams bucket j's files into a single new bucket-j
-    * file — per-bucket merge I/O, zero exchange, the same property
-    * the probe relies on. The rewrite lands as a sibling GENERATION
-    * directory (-a/-b alternating) under a staging table name, then
-    * swaps via drop + rename — a single-writer maintenance window,
-    * like every OPTIMIZE in the w-series — and the superseded
-    * generation's files are removed. Probe answers and the
-    * zero-exchange corpus side are unchanged (`PersistedIndexSpec`,
-    * plus the s17 gate which now runs build→append→compact→probe
-    * through the DuckDB oracle).
-    *
-    * Crash recovery: the DROP→RENAME swap is two statements, not one
-    * atomic operation. A crash BEFORE the drop leaves the live table
-    * untouched (re-run compaction; the defensive drop below clears
-    * the orphaned staging table). A crash BETWEEN drop and rename
-    * leaves no live `s17_corpus_idx` — the new generation's files
-    * survive under the staging name as the ONLY copy, and re-running
-    * compaction detects that window below and COMPLETES the
-    * interrupted rename before anything else (in particular before
-    * the defensive staging DROP, which would otherwise destroy the
-    * sole surviving generation — the r14 ADVICE hazard). No rebuild
-    * needed in either window (`PersistedIndexSpec` kills the swap
-    * mid-window and re-runs). */
-  private[graft] def s17Compact(s: SparkSession, d: String): Unit = {
-    val cat = s.sessionState.catalog
-    val liveId =
-      org.apache.spark.sql.catalyst.TableIdentifier("s17_corpus_idx")
-    val stagingId =
-      org.apache.spark.sql.catalyst.TableIdentifier("s17_corpus_idx_next")
-    // crash recovery FIRST: staging exists + live missing == a crash
-    // landed between the DROP and the RENAME of a previous swap, and
-    // the staging table holds the only surviving generation
-    if (!cat.tableExists(liveId) && cat.tableExists(stagingId)) {
-      s.sql("ALTER TABLE s17_corpus_idx_next RENAME TO s17_corpus_idx")
-    }
-    val curLoc = cat.getTableMetadata(liveId).location
-    val base = s17IndexPath(d)
-    val next =
-      if (curLoc.getPath.stripSuffix("/").endsWith("-a")) s"$base-b"
-      else s"$base-a"
-    val scanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = s.conf.get(scanKey, "true")
-    // force the bucketed scan (the auto mode drops it when no join or
-    // aggregate exploits the distribution — a plain rewrite doesn't)
-    s.conf.set(scanKey, "false")
-    // a prior crash after the staging write can leave an orphaned
-    // staging table whose metadata saveAsTable would trip over —
-    // clear it before writing the new generation
-    s.sql("DROP TABLE IF EXISTS s17_corpus_idx_next")
-    try {
-      s.table("s17_corpus_idx")
-        .write.mode("overwrite").option("path", next)
-        .bucketBy(8, "bucket_c")
-        .saveAsTable("s17_corpus_idx_next")
-    } finally s.conf.set(scanKey, prev)
-    s.sql("DROP TABLE s17_corpus_idx")
-    s.sql("ALTER TABLE s17_corpus_idx_next RENAME TO s17_corpus_idx")
-    deleteDir(curLoc.getPath)
-  }
+    * shuffle through [[IndexTower.compact]]'s generation swap (and its
+    * crash-window recovery — `PersistedIndexSpec` kills the swap
+    * mid-window and re-runs). The index has no meta table, so there is
+    * no generation to bump. Probe answers and the zero-exchange corpus
+    * side are unchanged (`PersistedIndexSpec`, plus the s17 gate which
+    * runs build→append→compact→probe through the DuckDB oracle). */
+  private[graft] def s17Compact(s: SparkSession, d: String): Unit =
+    IndexTower.compact(s, () => ())(("s17_corpus_idx",
+      (df, path, staging) =>
+        df.write.mode("overwrite").option("path", path)
+          .bucketBy(8, "bucket_c").saveAsTable(staging)))
 
   /** Nightly maintenance: bucket ONLY the delta and append through
     * the table's bucket spec — insertInto routes the new files into
@@ -1209,8 +1148,8 @@ object Similarity {
       cb1f: DataFrame, clut: DataFrame, candRecall: Double = -1.0) {
     // routing geometry, collected once per (index instance, wSup) —
     // the steady-state serving streams hold one PqIndex per
-    // generation (PqIndexCache), so a micro-batch pays a map lookup,
-    // not a re-collect
+    // generation (IndexTower.GenCache), so a micro-batch pays a map
+    // lookup, not a re-collect
     @transient private lazy val geomMemo =
       new java.util.concurrent.ConcurrentHashMap[Int, graft.functions.IvfGeom]()
     private[graft] def geom(wSup: Int): graft.functions.IvfGeom =
@@ -1232,6 +1171,11 @@ object Similarity {
     * pre-versioning meta table from a persistent metastore — as
     * stale and rebuilds. */
   private[graft] val PqMetaSchemaVer = 3
+
+  private[graft] val PqTower = IndexTower("vector",
+    Seq("s18_pq_meta", "s18_pq_sc", "s18_pq_cells", "s18_pq_cb",
+      "s18_pq_codes"),
+    Seq("np", "sl", "conf_fp", "cand_recall", "scope"), PqMetaSchemaVer)
 
   /** Every session conf that changes what a PQ build would produce or
     * how the oracle resolves its twin, flattened to one comparable
@@ -1613,8 +1557,9 @@ object Similarity {
     * train + calibrate on base, encode all).
     *
     * The meta generation bumps (serving streams pick the delta up on
-    * the next micro-batch via [[PqIndexCache]] — no restart) and the
-    * scope flips to "incremental": an incrementally-maintained index
+    * the next micro-batch via their [[IndexTower.GenCache]] — no
+    * restart) and the scope flips to "incremental": an
+    * incrementally-maintained index
     * intentionally differs from a from-scratch rebuild (different
     * training corpus ⇒ different centroids), so [[ensurePqIndex]]
     * treats it as stale and rebuilds for the consumers that demand
@@ -1641,18 +1586,7 @@ object Similarity {
       .join(attrs, "c_id")
       .select(cols.map(col).toIndexedSeq: _*)
       .write.mode("append").insertInto("s18_pq_codes")
-    val m = s.table("s18_pq_meta").head()
-    import s.implicits._
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_s18_pq_meta-" +
-      Integer.toHexString(d.hashCode)
-    Seq((m.getAs[Int]("np"), m.getAs[Int]("sl"),
-        m.getAs[String]("corpus_dir"), m.getAs[String]("conf_fp"),
-        m.getAs[Int]("schema_ver"), m.getAs[Long]("gen") + 1L,
-        m.getAs[Double]("cand_recall"), "incremental"))
-      .toDF("np", "sl", "corpus_dir", "conf_fp", "schema_ver",
-        "gen", "cand_recall", "scope")
-      .write.mode("overwrite").option("path", p)
-      .saveAsTable("s18_pq_meta")
+    PqTower.bumpGen(s, d, "scope" -> "incremental")
   }
 
   /** PQ-CODES COMPACTION (s26) — the OPTIMIZE step that closes the
@@ -1665,47 +1599,18 @@ object Similarity {
     * Compaction rewrites the codes table back to ONE file per cid
     * bucket (the bucketed scan is forced OFF for the read so the
     * small fragments coalesce into few tasks — few tasks × 8 buckets
-    * = 8 files) and swaps the new generation in via the shared
-    * drop+rename discipline ([[swapCompact]]) with its crash-window
-    * recovery. Layout-only: no row changes, dials/recall/scope stay
-    * the meta's; the generation bump makes a serving stream's
-    * [[PqIndexCache]] reload off the new file listing on its next
-    * micro-batch instead of reading the deleted fragments. */
+    * = 8 files) and swaps the new generation in via
+    * [[IndexTower.compact]] with its crash-window recovery.
+    * Layout-only: no row changes, dials/recall/scope stay the meta's;
+    * the generation bump makes a serving stream's cache reload off the
+    * new file listing on its next micro-batch instead of reading the
+    * deleted fragments. */
   private[graft] def compactPqCodes(s: SparkSession, d: String): Unit = {
-    refreshIndexTables(s, Seq("s18_pq_codes", "s18_pq_meta"))
-    val scanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = s.conf.get(scanKey, "true")
-    val superseded = {
-      s.conf.set(scanKey, "false")
-      try swapCompact(s, "s18_pq_codes", () => bumpPqGen(s, d),
-        (df, path, staging) =>
-          df.write.mode("overwrite").option("path", path)
-            .bucketBy(8, "cid").sortBy("cid").saveAsTable(staging))
-      finally s.conf.set(scanKey, prev)
-    }
-    // stamp the bumped generation BEFORE deleting the superseded
-    // files (see swapCompact's Scaladoc): a crash in between leaves
-    // the old generation readable for any cache still holding it
-    bumpPqGen(s, d)
-    deleteDir(superseded)
-  }
-
-  /** Rewrite `s18_pq_meta` with gen+1, all other fields verbatim —
-    * the cache-invalidation stamp shared by [[compactPqCodes]]'s
-    * normal path and [[swapCompact]]'s crash recovery. */
-  private def bumpPqGen(s: SparkSession, d: String): Unit = {
-    val m = s.table("s18_pq_meta").head()
-    import s.implicits._
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_s18_pq_meta-" +
-      Integer.toHexString(d.hashCode)
-    Seq((m.getAs[Int]("np"), m.getAs[Int]("sl"),
-        m.getAs[String]("corpus_dir"), m.getAs[String]("conf_fp"),
-        m.getAs[Int]("schema_ver"), m.getAs[Long]("gen") + 1L,
-        m.getAs[Double]("cand_recall"), m.getAs[String]("scope")))
-      .toDF("np", "sl", "corpus_dir", "conf_fp", "schema_ver",
-        "gen", "cand_recall", "scope")
-      .write.mode("overwrite").option("path", p)
-      .saveAsTable("s18_pq_meta")
+    PqTower.refresh(s)
+    IndexTower.compact(s, () => PqTower.bumpGen(s, d))(("s18_pq_codes",
+      (df, path, staging) =>
+        df.write.mode("overwrite").option("path", path)
+          .bucketBy(8, "cid").sortBy("cid").saveAsTable(staging)))
   }
 
   /** RECALL-DRIFT AUDIT (s27) — the measured trigger behind
@@ -1770,7 +1675,7 @@ object Similarity {
     * run [[auditPqRecall]]'s measured audit against the CURRENT
     * index generation and, when `rebuild_due`, rebuild from scratch
     * and persist — the generation bump carries the fresh index into
-    * running serving streams ([[PqIndexCache]]) on their next
+    * running serving streams (their generation caches) on their next
     * micro-batch, no restart. This is the consumer the audit's
     * verdict bit existed for: the nightly maintenance job calls this
     * instead of reading the report by hand, and "append nightly,
@@ -1783,12 +1688,9 @@ object Similarity {
     * the same build+persist every nightly full build pays. */
   private[graft] def maintainPqIndex(s: SparkSession, d: String,
       floorOverride: Option[Double] = None,
-      driftOverride: Option[Double] = None): Boolean = {
-    val due = auditPqRecall(s, d, floorOverride, driftOverride)
-      .head().getAs[Boolean]("rebuild_due")
-    if (due) persistPqIndex(s, d, buildPqIndex(s, d))
-    due
-  }
+      driftOverride: Option[Double] = None): Boolean =
+    IndexTower.rebuildIfDue(auditPqRecall(s, d, floorOverride,
+      driftOverride))(persistPqIndex(s, d, buildPqIndex(s, d)))
 
   /** s27's twin: the s24 two-phase chain (train + calibrate on the
     * base stripe, encode corpus-wide) supplies the index state; the
@@ -1953,76 +1855,30 @@ object Similarity {
     * the scan). */
   private[graft] def persistPqIndex(s: SparkSession, d: String,
       idx: PqIndex): Unit = {
-    def save(dfx: DataFrame, table: String,
-        bucketCol: Option[String]): Unit = {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_$table-" +
-        Integer.toHexString(d.hashCode)
-      val w = dfx.write.mode("overwrite").option("path", p)
-      bucketCol match {
-        case Some(bc) => w.bucketBy(8, bc).sortBy(bc).saveAsTable(table)
-        case None => w.saveAsTable(table)
-      }
-    }
     val attrs = new Tables(s, d).embeddings
       .select(col("vec_id").as("c_id"), col("label"))
-    save(idx.scCent, "s18_pq_sc", None)
-    save(idx.cellCent, "s18_pq_cells", None)
-    save(idx.cb1f, "s18_pq_cb", None)
-    save(idx.cellm.join(attrs, "c_id"), "s18_pq_codes", Some("cid"))
+    IndexTower.save(d, idx.scCent, "s18_pq_sc")
+    IndexTower.save(d, idx.cellCent, "s18_pq_cells")
+    IndexTower.save(d, idx.cb1f, "s18_pq_cb")
+    IndexTower.save(d, idx.cellm.join(attrs, "c_id"), "s18_pq_codes",
+      Some("cid"))
     import s.implicits._
-    // meta = dials + the FRESHNESS FINGERPRINT (exact corpus dir,
-    // resolved build/serve confs, schema version — what
-    // [[ensurePqIndex]] compares; the r16 ADVICE medium: a hashCode
-    // path suffix ignored conf overrides and could collide between
-    // dirs) + a GENERATION counter (monotone per persist — what a
-    // serving stream watches to pick up a nightly rebuild without
-    // restart) + the measured candidate recall (deployer-facing
+    // meta = dials + the resolved build/serve confs (what
+    // [[ensurePqIndex]] compares beside the corpus dir and schema
+    // version) + the measured candidate recall (deployer-facing
     // geometry evidence; -1 = unmeasured, i.e. a loaded-then-
-    // re-persisted index).
-    val prevGen: Long = try {
-      val mt = s.table("s18_pq_meta")
-      if (mt.columns.contains("gen")) mt.head().getAs[Long]("gen")
-      else 0L
-    } catch { case _: Exception => 0L }
-    save(Seq((idx.np, idx.sl, d, pqConfFingerprint(s),
-        PqMetaSchemaVer, prevGen + 1L, idx.candRecall, "full"))
-      .toDF("np", "sl", "corpus_dir", "conf_fp", "schema_ver",
-        "gen", "cand_recall", "scope"),
-      "s18_pq_meta", None)
-    // the rebuild re-pointed the codes table at its base path; a
-    // prior compaction may have left the previous live data under a
-    // -a/-b generation dir, now orphaned (persistLexIndex's
-    // idempotence discipline — without this, the NEXT compaction
-    // mistakes the stale sibling for a crash orphan). Cleared only
-    // AFTER the meta stamp above: a cache still holding the old
-    // generation re-probes and lands on the fresh build before the
-    // old files disappear.
-    val codesBase =
-      s"${System.getProperty("java.io.tmpdir")}/graft_s18_pq_codes-" +
-        Integer.toHexString(d.hashCode)
-    deleteDir(s"$codesBase-a"); deleteDir(s"$codesBase-b")
+    // re-persisted index)
+    PqTower.stampMeta(s, d,
+      Seq((idx.np, idx.sl, pqConfFingerprint(s), idx.candRecall, "full"))
+        .toDF("np", "sl", "conf_fp", "cand_recall", "scope"))
   }
 
   /** Load the persisted index back (s18): dials from the meta table,
     * frames from the catalog; clut re-derives from the saved
     * centroids + codebook (k·256 rows — cheaper to recompute than to
     * store per generation). */
-  /** Drop any cached file listing for the persisted index tables:
-    * a rebuild OVERWRITES them in place (possibly from another
-    * session — the nightly job next to a serving stream), and a
-    * reader holding the pre-overwrite listing would FAILED_READ_FILE
-    * on the deleted parts. Listing-only invalidation — tables are a
-    * handful of files; the next read re-lists one directory each. */
-  private def refreshIndexTables(s: SparkSession,
-      tables: Seq[String]): Unit =
-    tables.foreach { t =>
-      try s.catalog.refreshTable(t)
-      catch { case _: Exception => () } // missing table: nothing cached
-    }
-
   private[graft] def loadPqIndex(s: SparkSession): PqIndex = {
-    refreshIndexTables(s, Seq("s18_pq_sc", "s18_pq_cells", "s18_pq_cb",
-      "s18_pq_codes", "s18_pq_meta"))
+    PqTower.refresh(s)
     val meta = s.table("s18_pq_meta").head()
     val cellCent = s.table("s18_pq_cells")
     val cb1f = s.table("s18_pq_cb")
@@ -2031,39 +1887,10 @@ object Similarity {
       pqClut(cellCent, cb1f), meta.getAs[Double]("cand_recall"))
   }
 
-  /** The persisted index's GENERATION stamp alone — one 1-row read
-    * of the meta table. The steady-state per-micro-batch freshness
-    * probe for the serving streams (st17/st18): reload the full
-    * index only when this changes (a nightly rebuild/compaction
-    * swapped a new generation in), instead of re-deriving the k·256
-    * clut every batch (the r16 ADVICE low). */
-  private[graft] def loadPqMetaGen(s: SparkSession): Long = {
-    refreshIndexTables(s, Seq("s18_pq_meta"))
-    s.table("s18_pq_meta").head().getAs[Long]("gen")
-  }
+  private[graft] def loadPqMetaGen(s: SparkSession): Long = PqTower.gen(s)
 
-  /** Generation-cached handle on the persisted PQ index for the
-    * serving streams (st17/st18): the steady-state micro-batch pays
-    * ONE 1-row meta read (the generation probe) instead of a full
-    * index reload + k·256 clut re-derivation per batch (the r16
-    * ADVICE low), while a nightly rebuild/append that persists a new
-    * generation is picked up on the NEXT micro-batch without
-    * restarting the stream — the build-nightly/serve-continuously
-    * seam (`StreamIndexRefreshSpec` proves the swap mid-stream).
-    * Synchronized: foreachBatch epochs are sequential per query, but
-    * two serving streams may share one cache. */
-  private[graft] final class PqIndexCache(s0: SparkSession) {
-    private var cached: (Long, PqIndex) =
-      (loadPqMetaGen(s0), loadPqIndex(s0))
-    def current(sess: SparkSession): PqIndex = synchronized {
-      val g = loadPqMetaGen(sess)
-      if (g != cached._1) cached = (g, loadPqIndex(sess))
-      cached._2
-    }
-    /** Generation of the index the LAST `current()` call served —
-      * observability for specs and ops dashboards. */
-    def lastGen: Long = synchronized(cached._1)
-  }
+  private[graft] def pqCache(s: SparkSession) =
+    new IndexTower.GenCache(s, PqTower, loadPqIndex)
 
   /** Serve-only entry for the scale probe: answer the query workload
     * from the LAST-persisted s18 index — no training, no calibration,
@@ -2073,42 +1900,25 @@ object Similarity {
     servePq(s, d, loadPqIndex(s))
 
   /** Load the persisted index when one is FRESH for this corpus AND
-    * this session's dials, else build + persist one. Freshness is the
-    * FULL persisted fingerprint, compared field by field: exact
-    * corpus-dir string (not a hashCode suffix — collisions between
-    * dirs would silently serve the wrong index), the resolved conf
-    * fingerprint (an ivfNprobe/pqShortlist/recall-pct/minCandRecall
-    * override set AFTER the persist must rebuild, or the index serves
-    * stale dials while the oracle resolves the current override — the
-    * r16 ADVICE medium), the meta schema version, and the codes
-    * table's attribute column (an old-schema index without `label`
-    * would crash the filtered serves instead of rebuilding). The
-    * serve-shaped queries (s18 serve-only, s19, st18) share this so a
-    * session pays at most one build per (corpus, dials). */
+    * this session's dials, else build + persist one. Beyond
+    * [[IndexTower.ensure]]'s tables/dir/schema checks the fingerprint
+    * holds the resolved conf fingerprint (an ivfNprobe/pqShortlist/
+    * recall-pct/minCandRecall override set AFTER the persist must
+    * rebuild, or the index serves stale dials while the oracle
+    * resolves the current override — the r16 ADVICE medium), the
+    * "full" scope (an incrementally-maintained s24 index is
+    * intentionally NOT the from-scratch build — different training
+    * corpus, different centroids — so explicit serve paths use
+    * loadPqIndex), and the codes table's attribute column (an
+    * old-schema index without `label` would crash the filtered serves
+    * instead of rebuilding). The serve-shaped queries (s18 serve-only,
+    * s19, st18) share this so a session pays at most one build per
+    * (corpus, dials). */
   private[graft] def ensurePqIndex(s: SparkSession, d: String): PqIndex = {
-    val cat = s.sessionState.catalog
-    def exists(t: String) = cat.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    val metaCols = Set("np", "sl", "corpus_dir", "conf_fp",
-      "schema_ver", "gen", "cand_recall", "scope")
-    refreshIndexTables(s, Seq("s18_pq_meta", "s18_pq_codes"))
-    val fresh = exists("s18_pq_codes") && exists("s18_pq_meta") && {
-      val mt = s.table("s18_pq_meta")
-      metaCols.subsetOf(mt.columns.toSet) && {
-        val m = mt.head()
-        m.getAs[String]("corpus_dir") == d &&
-          m.getAs[String]("conf_fp") == pqConfFingerprint(s) &&
-          m.getAs[Int]("schema_ver") == PqMetaSchemaVer &&
-          // an incrementally-maintained index (s24) is intentionally
-          // NOT the from-scratch build — different training corpus,
-          // different centroids. ensure's contract is "the
-          // deterministic full-build twin", so anything but a "full"
-          // scope rebuilds (explicit serve paths use loadPqIndex)
-          m.getAs[String]("scope") == "full" &&
-          s.table("s18_pq_codes").columns.contains("label")
-      }
-    }
-    if (!fresh) persistPqIndex(s, d, buildPqIndex(s, d))
+    PqTower.ensure(s, d,
+      Seq("conf_fp" -> pqConfFingerprint(s), "scope" -> "full"),
+      s.table("s18_pq_codes").columns.contains("label"))(
+      persistPqIndex(s, d, buildPqIndex(s, d)))
     loadPqIndex(s)
   }
 
@@ -2698,19 +2508,9 @@ object Similarity {
     * generation probe can't read. */
   private[graft] val LexMetaSchemaVer = 2
 
-  private def lexPath(d: String, table: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_$table-" +
-      Integer.toHexString(d.hashCode)
-
-  private def lexSave(s: SparkSession, d: String, dfx: DataFrame,
-      table: String, bucketCol: Option[String]): Unit = {
-    val p = lexPath(d, table)
-    val w = dfx.write.mode("overwrite").option("path", p)
-    bucketCol match {
-      case Some(bc) => w.bucketBy(8, bc).sortBy(bc).saveAsTable(table)
-      case None => w.saveAsTable(table)
-    }
-  }
+  private[graft] val LexTower = IndexTower("lexical",
+    Seq("s21_lex_meta", "s21_lex_post", "s21_lex_df", "s21_lex_dl"),
+    Seq("nd", "tl", "scope"), LexMetaSchemaVer)
 
   /** Tokenize the corpus side of `d` (even doc_ids) gated by
     * `docGate`, yielding the lexical index's two base frames. */
@@ -2739,42 +2539,18 @@ object Similarity {
     val (tf0, dl0) = lexFrames(s, d, docGate)
     val tf = tf0.cache() // feeds postings AND df — one tokenization
     val dl = dl0.cache() // feeds the dl table AND the stats row
-    lexSave(s, d, tf, "s21_lex_post", Some("term"))
-    lexSave(s, d, tf.groupBy(col("term")).agg(count(lit(1)).as("df")),
+    IndexTower.save(d, tf, "s21_lex_post", Some("term"))
+    IndexTower.save(d,
+      tf.groupBy(col("term")).agg(count(lit(1)).as("df")),
       "s21_lex_df", Some("term"))
-    lexSave(s, d, dl, "s21_lex_dl", None)
+    IndexTower.save(d, dl, "s21_lex_dl")
     val st = dl.agg(count(lit(1)).as("nd"),
       coalesce(sum(col("dl")), lit(0L)).as("tl")).head()
     tf.unpersist(false); dl.unpersist(false)
     import s.implicits._
-    lexSave(s, d,
-      Seq((st.getLong(0), st.getLong(1), d, LexMetaSchemaVer, scope,
-        lexPrevGen(s) + 1L))
-        .toDF("nd", "tl", "corpus_dir", "schema_ver", "scope", "gen"),
-      "s21_lex_meta", None)
-    // the rebuild re-pointed each table at its base path; a prior
-    // compaction may have left the previous live data under a -a/-b
-    // generation dir, now orphaned (s17BuildBase's idempotence
-    // discipline). Cleared only AFTER the meta stamp above — a cache
-    // still holding the old generation re-probes and lands on the
-    // fresh build before the old files disappear (the same ordering
-    // [[swapCompact]]'s delete-after-meta contract mandates).
-    Seq("s21_lex_post", "s21_lex_dl").foreach { t =>
-      deleteDir(s"${lexPath(d, t)}-a"); deleteDir(s"${lexPath(d, t)}-b")
-    }
+    LexTower.stampMeta(s, d,
+      Seq((st.getLong(0), st.getLong(1), scope)).toDF("nd", "tl", "scope"))
   }
-
-  /** Generation the current lex meta carries, 0 when absent/legacy —
-    * every meta write stamps prevGen + 1 so the serving streams'
-    * generation probe sees rebuilds, delta appends, and compactions
-    * alike as "the index moved". */
-  private def lexPrevGen(s: SparkSession): Long =
-    try {
-      refreshIndexTables(s, Seq("s21_lex_meta"))
-      val mt = s.table("s21_lex_meta")
-      if (mt.columns.contains("gen")) mt.head().getAs[Long]("gen")
-      else 0L
-    } catch { case _: Exception => 0L }
 
   /** INCREMENTAL lexical-index maintenance — s17's nightly-delta
     * discipline for the postings tower: today's `deltaGate` docs
@@ -2804,18 +2580,13 @@ object Similarity {
     val stage = java.nio.file.Files
       .createTempDirectory("graft_lex_dfmerge").toString
     merged.write.mode("overwrite").parquet(stage)
-    lexSave(s, d, s.read.parquet(stage), "s21_lex_df", Some("term"))
+    IndexTower.save(d, s.read.parquet(stage), "s21_lex_df", Some("term"))
     val stD = dlD.agg(count(lit(1)).as("nd"),
       coalesce(sum(col("dl")), lit(0L)).as("tl")).head()
     tfD.unpersist(false); dlD.unpersist(false)
     val m = s.table("s21_lex_meta").head()
-    import s.implicits._
-    lexSave(s, d,
-      Seq((m.getAs[Long]("nd") + stD.getLong(0),
-        m.getAs[Long]("tl") + stD.getLong(1), d, LexMetaSchemaVer,
-        "full", m.getAs[Long]("gen") + 1L))
-        .toDF("nd", "tl", "corpus_dir", "schema_ver", "scope", "gen"),
-      "s21_lex_meta", None)
+    LexTower.bumpGen(s, d, "nd" -> (m.getAs[Long]("nd") + stD.getLong(0)),
+      "tl" -> (m.getAs[Long]("tl") + stD.getLong(1)), "scope" -> "full")
   }
 
   /** OPTIMIZE pass for the incremental lexical index (s23) — s17's
@@ -2827,59 +2598,22 @@ object Similarity {
     * (bucketed scan forced on → one partition per bucket → the
     * bucketed rewrite streams bucket j's files into a single new
     * bucket-j file), and the doc-lengths table coalesces (also
-    * shuffle-free). Each rewrite lands as a sibling GENERATION dir
-    * (-a/-b alternating) under a staging table name, swaps via
-    * drop + rename, and the superseded generation's files are
-    * removed — a single-writer maintenance window, like every
-    * OPTIMIZE in the w-series. The meta GENERATION is stamped +1
-    * after the swap, so a serving stream's [[LexIndexCache]] reloads
-    * (and re-lists files) on its next micro-batch instead of reading
-    * the deleted parts. Answers are unchanged — compaction is
-    * layout-only, which is exactly what the s23 gate proves (the
-    * compacted index must still hash-match the from-source oracle).
-    *
-    * Crash recovery (the r14/r16 hazard class, handled exactly like
-    * [[s17Compact]]): a crash BETWEEN a table's DROP and RENAME
-    * leaves the new generation under the staging name as the ONLY
-    * copy; re-running compaction completes the interrupted rename
-    * FIRST — before the defensive staging drop that would otherwise
-    * destroy the sole surviving generation (`LexCompactionSpec` kills
-    * the swap mid-window and re-runs). */
-  private[graft] def compactLexIndex(s: SparkSession, d: String): Unit = {
-    val scanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = s.conf.get(scanKey, "true")
-    val superseded = {
-      s.conf.set(scanKey, "false")
-      try Seq(
-        swapCompact(s, "s21_lex_post", () => bumpLexGen(s, d),
-          (df, path, staging) =>
-            df.write.mode("overwrite").option("path", path)
-              .bucketBy(8, "term").sortBy("term").saveAsTable(staging)),
-        swapCompact(s, "s21_lex_dl", () => bumpLexGen(s, d),
-          (df, path, staging) =>
-            df.coalesce(8).write.mode("overwrite").option("path", path)
-              .saveAsTable(staging)))
-      finally s.conf.set(scanKey, prev)
-    }
-    // gen bump BEFORE the superseded dirs go (swapCompact's contract
-    // — same crash-window discipline as compactPqCodes)
-    bumpLexGen(s, d)
-    superseded.foreach(deleteDir)
-  }
-
-  /** Rewrite `s21_lex_meta` with gen+1, all other fields verbatim —
-    * shared by [[compactLexIndex]]'s normal path and
-    * [[swapCompact]]'s crash recovery. */
-  private def bumpLexGen(s: SparkSession, d: String): Unit = {
-    val m = s.table("s21_lex_meta").head()
-    import s.implicits._
-    lexSave(s, d,
-      Seq((m.getAs[Long]("nd"), m.getAs[Long]("tl"),
-        m.getAs[String]("corpus_dir"), m.getAs[Int]("schema_ver"),
-        m.getAs[String]("scope"), m.getAs[Long]("gen") + 1L))
-        .toDF("nd", "tl", "corpus_dir", "schema_ver", "scope", "gen"),
-      "s21_lex_meta", None)
-  }
+    * shuffle-free). Both swap in through [[IndexTower.compact]] (the
+    * crash-window recovery `LexCompactionSpec` exercises), and the
+    * meta GENERATION is stamped +1 after the swap, so a serving
+    * stream's cache reloads (and re-lists files) on its next
+    * micro-batch instead of reading the deleted parts. Answers are
+    * unchanged — compaction is layout-only, which is exactly what the
+    * s23 gate proves (the compacted index must still hash-match the
+    * from-source oracle). */
+  private[graft] def compactLexIndex(s: SparkSession, d: String): Unit =
+    IndexTower.compact(s, () => LexTower.bumpGen(s, d))(
+      ("s21_lex_post", (df, path, staging) =>
+        df.write.mode("overwrite").option("path", path)
+          .bucketBy(8, "term").sortBy("term").saveAsTable(staging)),
+      ("s21_lex_dl", (df, path, staging) =>
+        df.coalesce(8).write.mode("overwrite").option("path", path)
+          .saveAsTable(staging)))
 
   /** LEXICAL STALENESS AUDIT (s31) — BM25 has no recall to drift, but
     * its GLOBAL statistics do: nd and avgdl are frozen into the meta
@@ -2896,44 +2630,28 @@ object Similarity {
     *     catches edits and holes the count can't see.
     * One row out; `rebuild_due` fires on either dial. */
   private[graft] def auditLexStaleness(s: SparkSession, d: String,
-      minCoverageOverride: Option[Double] = None,
-      maxDlMismatchOverride: Option[Double] = None): DataFrame = {
-    refreshIndexTables(s, Seq("s21_lex_dl", "s21_lex_meta"))
+      minCoverageOverride: Option[Double] = None): DataFrame = {
+    LexTower.refresh(s)
     // 1-row meta read + one corpus count: bounded planning reads
     val ndIndex = s.table("s21_lex_meta").head().getAs[Long]("nd")
     val minCov = minCoverageOverride.getOrElse(LexMinCoverage)
-    val maxMism = maxDlMismatchOverride.getOrElse(LexMaxDlMismatch)
     val corpus = new Tables(s, d).documents
       .filter(col("doc_id") % 2 === 0)
     val ndCorpus = corpus.count()
-    val thresh = (LexAuditSample * 4294967296L - 1L) /
-      math.max(1L, ndCorpus) + 1L
-    val dlNow = corpus
-      .filter(conv(substring(md5(concat(lit("lexa:"),
-        col("doc_id").cast("string"))), 1, 8), 16, 10).cast("long")
-        < lit(thresh))
+    val dlNow = IndexTower.auditSample(corpus, "lexa:", LexAuditSample,
+        ndCorpus)
       .select(col("doc_id"),
         explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("dl_now"))
     val dlIdx = s.table("s21_lex_dl")
       .select(col("doc_id"), col("dl").as("dl_idx"))
-    dlNow.join(dlIdx, Seq("doc_id"), "left")
+    IndexTower.auditVerdict(dlNow.join(dlIdx, Seq("doc_id"), "left")
       .agg(count(lit(1)).as("n_sample"),
         coalesce(sum(when(col("dl_idx").isNull
             || col("dl_idx") =!= col("dl_now"), 1L).otherwise(0L)),
-          lit(0L)).as("dl_mismatches"))
-      .select(lit(ndIndex).as("nd_index"),
-        lit(ndCorpus).as("nd_corpus"),
-        col("n_sample"), col("dl_mismatches"),
-        (lit(ndIndex).cast("double") / lit(ndCorpus).cast("double"))
-          .as("coverage"),
-        (col("dl_mismatches").cast("double")
-          / col("n_sample").cast("double")).as("mismatch_frac"),
-        ((lit(ndIndex).cast("double") / lit(ndCorpus).cast("double"))
-            < lit(minCov)
-          || (col("dl_mismatches").cast("double")
-            / col("n_sample").cast("double")) > lit(maxMism))
-          .as("rebuild_due"))
+          lit(0L)).as("dl_mismatches")),
+      ndIndex, ndCorpus, "dl_mismatches", "mismatch_frac", minCov,
+      LexMaxDlMismatch)
   }
 
   /** NIGHTLY LEXICAL MAINTENANCE (s30) — [[maintainPqIndex]]'s shape
@@ -2941,16 +2659,12 @@ object Similarity {
     * rebuild-when-due. The rebuild is a full [[persistLexIndex]]
     * (tokenize-once build + generation bump), so running st19
     * streams pick the fresh index up on their next micro-batch via
-    * [[LexIndexCache]] without restart. Compaction (s23) stays its
+    * their generation caches without restart. Compaction (s23) stays its
     * own OPTIMIZE entry, exactly as s26 does for the PQ tower. */
   private[graft] def maintainLexIndex(s: SparkSession, d: String,
-      minCoverageOverride: Option[Double] = None,
-      maxDlMismatchOverride: Option[Double] = None): Boolean = {
-    val due = auditLexStaleness(s, d, minCoverageOverride,
-      maxDlMismatchOverride).head().getAs[Boolean]("rebuild_due")
-    if (due) persistLexIndex(s, d)
-    due
-  }
+      minCoverageOverride: Option[Double] = None): Boolean =
+    IndexTower.rebuildIfDue(auditLexStaleness(s, d, minCoverageOverride))(
+      persistLexIndex(s, d))
 
   /** s31's twin: the index's dl table is modelled from source under
     * the same doc gate the engine built with (doc_id % 5 <> 0), the
@@ -2992,125 +2706,28 @@ object Similarity {
             AS rebuild_due
         FROM cmp, ndi, ndc""")
 
-  /** One table's generation swap: rewrite `live` into the sibling
-    * generation dir via `write(frame, nextPath, stagingName)`, then
-    * DROP + RENAME. Recovery for the drop/rename window runs FIRST
-    * (see [[compactLexIndex]]).
-    *
-    * Returns the SUPERSEDED generation's dir instead of deleting it:
-    * the caller deletes it only AFTER stamping the bumped meta
-    * generation (the r17 ADVICE low on [[compactPqCodes]] — a crash
-    * between the swap and the meta write used to leave the new
-    * layout under the OLD generation, so a serving [[PqIndexCache]]
-    * never saw a gen change and kept a file listing pointing at
-    * deleted fragments). With delete-after-meta, a crash anywhere in
-    * the window leaves the old files on disk and the serving cache
-    * either at (old gen, old files) or (new gen, new files) — both
-    * readable.
-    *
-    * RE-RUNNING a crashed compaction (the r18 ADVICE residual): if
-    * the prior run died AFTER its swap but BEFORE its meta bump, the
-    * orphaned sibling dir this run must clear IS the superseded old
-    * generation — and a serving cache that never saw a gen change may
-    * still hold its file listing. So when an orphan exists, the
-    * recovery path invokes `bumpGen` FIRST (forcing caches onto the
-    * already-live layout on their next lookup) and only then deletes
-    * the orphan. For the benign orphan shapes (a crash before the
-    * swap leaves the UNSWAPPED new copy, which no cache ever listed)
-    * the extra bump is a harmless spurious reload of the unchanged
-    * live layout — gen is an opaque monotonic counter. The normal
-    * path (no orphan) never bumps here. */
-  private def swapCompact(s: SparkSession, live: String,
-      bumpGen: () => Unit,
-      write: (DataFrame, String, String) => Unit): String = {
-    val cat = s.sessionState.catalog
-    val staging = live + "_next"
-    val liveId = org.apache.spark.sql.catalyst.TableIdentifier(live)
-    val stagingId = org.apache.spark.sql.catalyst.TableIdentifier(staging)
-    if (!cat.tableExists(liveId) && cat.tableExists(stagingId)) {
-      s.sql(s"ALTER TABLE $staging RENAME TO $live")
-    }
-    val cur = cat.getTableMetadata(liveId).location.getPath
-      .stripSuffix("/")
-    val base = cur.stripSuffix("-a").stripSuffix("-b")
-    val next = if (cur.endsWith("-a")) s"$base-b" else s"$base-a"
-    // a prior crash after the staging write leaves an orphaned staging
-    // table whose metadata saveAsTable would trip over
-    s.sql(s"DROP TABLE IF EXISTS $staging")
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(next))) {
-      bumpGen()
-      deleteDir(next)
-    }
-    write(s.table(live), next, staging)
-    s.sql(s"DROP TABLE $live")
-    s.sql(s"ALTER TABLE $staging RENAME TO $live")
-    cur
-  }
-
   private[graft] def loadLexIndex(s: SparkSession): LexIndex = {
-    refreshIndexTables(s, Seq("s21_lex_post", "s21_lex_df",
-      "s21_lex_dl", "s21_lex_meta"))
+    LexTower.refresh(s)
     val m = s.table("s21_lex_meta").head()
     LexIndex(s.table("s21_lex_post"), s.table("s21_lex_df"),
       s.table("s21_lex_dl"), m.getAs[Long]("nd"), m.getAs[Long]("tl"))
   }
 
   /** Load the persisted lexical index when one is fresh for this
-    * corpus (exact dir string + schema version — no serving dials
-    * exist for the lexical tower, so the fingerprint is smaller than
-    * the PQ one), else build + persist. */
+    * corpus, else build + persist. No serving dials exist for the
+    * lexical tower, so beyond [[IndexTower.ensure]]'s tables/dir/
+    * schema checks the fingerprint is the "full" scope alone: a
+    * base-only build whose delta never landed is STALE — an
+    * interrupted incremental job must rebuild, never serve half. */
   private[graft] def ensureLexIndex(s: SparkSession, d: String): LexIndex = {
-    val cat = s.sessionState.catalog
-    def exists(t: String) = cat.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    refreshIndexTables(s, Seq("s21_lex_meta"))
-    val metaCols =
-      Set("nd", "tl", "corpus_dir", "schema_ver", "scope", "gen")
-    val fresh = exists("s21_lex_post") && exists("s21_lex_meta") && {
-      val mt = s.table("s21_lex_meta")
-      metaCols.subsetOf(mt.columns.toSet) && {
-        val m = mt.head()
-        m.getAs[String]("corpus_dir") == d &&
-          m.getAs[Int]("schema_ver") == LexMetaSchemaVer &&
-          // a base-only build whose delta never landed is STALE — an
-          // interrupted incremental job must rebuild, never serve half
-          m.getAs[String]("scope") == "full"
-      }
-    }
-    if (!fresh) persistLexIndex(s, d)
+    LexTower.ensure(s, d, Seq("scope" -> "full"))(persistLexIndex(s, d))
     loadLexIndex(s)
   }
 
-  /** The lexical index's GENERATION stamp alone — one 1-row read of
-    * the meta table, the steady-state per-micro-batch freshness probe
-    * for the streamed hybrid serve's lexical tower (the exact twin of
-    * [[loadPqMetaGen]] on the vector tower). */
-  private[graft] def loadLexMetaGen(s: SparkSession): Long = {
-    refreshIndexTables(s, Seq("s21_lex_meta"))
-    s.table("s21_lex_meta").head().getAs[Long]("gen")
-  }
+  private[graft] def loadLexMetaGen(s: SparkSession): Long = LexTower.gen(s)
 
-  /** Generation-cached handle on the persisted lexical index for the
-    * serving streams (st19): the steady-state micro-batch pays ONE
-    * 1-row meta read instead of the full [[ensureLexIndex]] freshness
-    * walk (4 table refreshes + two meta reads) per batch, while a
-    * nightly rebuild, delta append (s22), or compaction that stamps a
-    * new generation is picked up on the NEXT micro-batch without
-    * restarting the stream — [[StreamLexRefreshSpec]] proves the swap
-    * mid-stream, completing for the lexical tower what
-    * [[StreamIndexRefreshSpec]] proved for the PQ tower. Synchronized
-    * for the same reason as [[PqIndexCache]]. */
-  private[graft] final class LexIndexCache(s0: SparkSession) {
-    private var cached: (Long, LexIndex) =
-      (loadLexMetaGen(s0), loadLexIndex(s0))
-    def current(sess: SparkSession): LexIndex = synchronized {
-      val g = loadLexMetaGen(sess)
-      if (g != cached._1) cached = (g, loadLexIndex(sess))
-      cached._2
-    }
-    /** Generation of the index the LAST `current()` call served. */
-    def lastGen: Long = synchronized(cached._1)
-  }
+  private[graft] def lexCache(s: SparkSession) =
+    new IndexTower.GenCache(s, LexTower, loadLexIndex)
 
   /** One micro-batch of hybrid queries (doc_id, text) against the
     * persisted indexes — the st19 streaming entry AND s21's
@@ -4278,7 +3895,7 @@ object Similarity {
     // no corpus re-pass, base segments untouched. Serving picks the
     // appended rows up as ordinary codes-table rows (the candidate
     // map IS the table), and the meta generation bump carries the
-    // delta into running streams (PqIndexCache). The gate is the
+    // delta into running streams (their GenCache). The gate is the
     // TWO-PHASE twin: the oracle recomputes train+calibrate on the
     // base stripe and encode+serve over the whole corpus — the exact
     // function the append implements, hash-checked end to end (an

@@ -981,7 +981,7 @@ object StreamingOps {
         // 1-row generation probe, not a full reload + clut
         // re-derivation; a new persisted generation (nightly rebuild)
         // is picked up next batch without restart
-        val idxCache = new Similarity.PqIndexCache(s)
+        val idxCache = Similarity.pqCache(s)
         val q = embStream(s, d)
           .filter(col("vec_id") % 2 === 1)
           .select(col("vec_id").as("q_id"), col("embedding").as("av"))
@@ -1022,7 +1022,7 @@ object StreamingOps {
         Similarity.ensurePqIndex(s, d)
         val out = Files.createTempDirectory("graft_st18_out").toString
         // same generation-cached discipline as st17
-        val idxCache = new Similarity.PqIndexCache(s)
+        val idxCache = Similarity.pqCache(s)
         val q = embStream(s, d)
           .filter(col("vec_id") % 2 === 1)
           .select(col("vec_id").as("q_id"), col("embedding").as("av"),
@@ -1066,8 +1066,8 @@ object StreamingOps {
         Similarity.ensurePqIndex(s, d)
         Similarity.ensureLexIndex(s, d)
         val out = Files.createTempDirectory("graft_st19_out").toString
-        val idxCache = new Similarity.PqIndexCache(s)
-        val lexCache = new Similarity.LexIndexCache(s)
+        val idxCache = Similarity.pqCache(s)
+        val lexCache = Similarity.lexCache(s)
         val q = docStream(s, d)
           .select(col("doc_id"), col("text"))
           .writeStream
@@ -1238,14 +1238,14 @@ object StreamingOps {
     // per-row fold read nothing across queries), so s28's twin gates
     // both — the one-SQL-many-consumers pattern, again. A nightly
     // rebuild/append/compaction persisting a new generation is
-    // picked up next micro-batch via PqIndexCache, no restart.
+    // picked up next micro-batch via its generation cache, no restart.
     QueryDef(
       "st23_stream_mmr_serving",
       (s, d) => {
         import graft.operators.Similarity
         Similarity.ensurePqIndex(s, d)
         val out = Files.createTempDirectory("graft_st23_out").toString
-        val idxCache = new Similarity.PqIndexCache(s)
+        val idxCache = Similarity.pqCache(s)
         val q = embStream(s, d)
           .filter(Similarity.mmrQueryGate(s, d))
           .select(col("vec_id").as("q_id"), col("embedding").as("av"))

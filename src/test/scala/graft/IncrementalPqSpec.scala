@@ -13,7 +13,7 @@ import graft.operators.Similarity
   *    catalog spec — s17/s22's discipline), and the appended rows
   *    make every delta vector servable;
   *  - the generation bumps and a serving cache picks the delta up
-  *    without restart (the PqIndexCache contract extended to
+  *    without restart (the generation-cache contract extended to
   *    appends);
   *  - the scope guard: an incrementally-maintained index is NOT the
   *    from-scratch build (different training corpus), so
@@ -42,7 +42,7 @@ class IncrementalPqSpec extends SparkSpec {
       Similarity.buildPqIndex(spark, sf,
         Some(col("vec_id") % 10 =!= 0)))
     assert(Similarity.loadPqMetaGen(spark) === 1L)
-    val cache = new Similarity.PqIndexCache(spark)
+    val cache = Similarity.pqCache(spark)
     val baseIdx = cache.current(spark)
     val baseFiles = spark.table("s18_pq_codes").inputFiles
       .map(p => p -> md5Of(p)).toMap
@@ -127,7 +127,7 @@ class IncrementalPqSpec extends SparkSpec {
       .servePqBatch(spark, sf, qFrame(q2), Similarity.loadPqIndex(spark))
       .orderBy(col("q_id")).collect()
 
-    val cache = new Similarity.PqIndexCache(spark)
+    val cache = Similarity.pqCache(spark)
     val genUsed = scala.collection.concurrent.TrieMap.empty[Long, Long]
     val schema = spark.read.parquet(s"$input/00.parquet").schema
     val q = spark.readStream.schema(schema)

@@ -12,7 +12,7 @@ import graft.operators.Similarity
   *    term-bucket (8), and the doc-lengths table bin-packs too;
   *  - layout-only: postings/df/dl/meta-scalars are row-for-row
   *    unchanged by compaction;
-  *  - the generation bumps, so a serving stream's LexIndexCache
+  *  - the generation bumps, so a serving stream's generation cache
   *    reloads (fresh file listing) on its next micro-batch instead of
   *    reading the deleted pre-compaction parts;
   *  - crash recovery: a kill BETWEEN the swap's DROP and RENAME leaves
@@ -121,7 +121,7 @@ class LexCompactionSpec extends SparkSpec {
       "identically (layout-only)") {
     buildIncremental()
     val pq = Similarity.ensurePqIndex(spark, sf)
-    val cache = new Similarity.LexIndexCache(spark)
+    val cache = Similarity.lexCache(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
     val before = Similarity

@@ -167,7 +167,7 @@ class MaintainIndexesSpec extends SparkSpec {
     // pin this property.)
     val gateSf = "/root/testdata/sf0.01"
     def gate() = {
-      Multimodal.refreshPhTables(spark)
+      Multimodal.PhTower.refresh(spark)
       val m = spark.table("m09_ph_meta").head()
       Multimodal.twoTierGateBatch(
         new Tables(spark, gateSf).documents

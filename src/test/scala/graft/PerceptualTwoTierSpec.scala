@@ -9,9 +9,10 @@ import graft.operators.Multimodal
   *
   *  - the floor rule's occupancy semantics (2^f ≥ 4n², capped at
   *    grid fill) at its integer boundaries;
-  *  - the MECHANISM the design rests on (the M08WideGridProbe
-  *    refutation's premise): a sub-grid payload fills only its own
-  *    nb prefix positions, so its signature carries at most nb bits
+  *  - the MECHANISM the design rests on (the premise of the
+  *    wider-grid refutation, PLANS.md r19 item 7): a sub-grid
+  *    payload fills only its own nb prefix positions, so its
+  *    signature carries at most nb bits
   *    of entropy and is IDENTICAL under any wider grid — grid width
   *    is inert below grid fill;
   *  - the tier split on the gated query: every perceptual pair is

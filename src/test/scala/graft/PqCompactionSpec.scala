@@ -13,7 +13,7 @@ import graft.operators.Similarity
   *    and removes every superseded segment;
   *  - layout-only: codes rows, dials, measured recall, and scope are
   *    unchanged by compaction;
-  *  - the generation bumps, so a serving stream's PqIndexCache
+  *  - the generation bumps, so a serving stream's generation cache
   *    reloads (fresh file listing) on its next micro-batch instead of
   *    reading the deleted pre-compaction parts;
   *  - crash recovery: a kill BETWEEN the swap's DROP and RENAME
@@ -121,7 +121,7 @@ class PqCompactionSpec extends SparkSpec {
       "serving cache reloads on the generation bump and answers " +
       "identically (layout-only)") {
     buildIncremental()
-    val cache = new Similarity.PqIndexCache(spark)
+    val cache = Similarity.pqCache(spark)
     val qs = spark.read.parquet(s"$sf/embeddings.parquet")
       .filter(col("vec_id") % 2 === 1)
       .select(col("vec_id").as("q_id"), col("embedding").as("av"))

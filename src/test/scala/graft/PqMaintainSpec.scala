@@ -105,7 +105,7 @@ class PqMaintainSpec extends SparkSpec {
     stage("00", 1000000L, q1)
     stage("01", 1060000L, q2)
 
-    val cache = new Similarity.PqIndexCache(spark)
+    val cache = Similarity.pqCache(spark)
     val genUsed = scala.collection.concurrent.TrieMap.empty[Long, Long]
     val schema = spark.read.parquet(s"$input/00.parquet").schema
     val q = spark.readStream.schema(schema)

@@ -16,7 +16,7 @@ import graft.operators.Similarity
   * its generation's batch-side serve, row for row), and keep the
   * exactly-once landing across the swap.
   *
-  * The mechanism under test is [[Similarity.PqIndexCache]]: the
+  * The mechanism under test is [[graft.operators.IndexTower.GenCache]]: the
   * steady-state micro-batch pays one 1-row generation probe on the
   * meta table; only a changed generation pays the full index reload.
   * (That probe is also why this works at all — the r16 per-batch
@@ -75,7 +75,7 @@ class StreamIndexRefreshSpec extends SparkSpec {
     // ONE continuous stream, one file per micro-batch; after batch 0
     // is served and landed, the "nightly job" persists generation 2
     // under a pinned-nprobe dial — the stream is never stopped
-    val cache = new Similarity.PqIndexCache(spark)
+    val cache = Similarity.pqCache(spark)
     val genUsed = scala.collection.concurrent.TrieMap.empty[Long, Long]
     val schema = spark.read.parquet(s"$input/00.parquet").schema
     val q = spark.readStream.schema(schema)
@@ -135,7 +135,7 @@ class StreamIndexRefreshSpec extends SparkSpec {
       "unchanged generation keeps the SAME index object") {
     dropIndexTables()
     Similarity.ensurePqIndex(spark, sf)
-    val cache = new Similarity.PqIndexCache(spark)
+    val cache = Similarity.pqCache(spark)
     val first = cache.current(spark)
     // same generation -> the cached instance, not a re-derived one
     assert(cache.current(spark) eq first,

@@ -17,7 +17,7 @@ import graft.operators.Similarity
   * current when it was served, and keep the exactly-once landing
   * across the swap.
   *
-  * The mechanism under test is [[Similarity.LexIndexCache]]: the
+  * The mechanism under test is [[graft.operators.IndexTower.GenCache]]: the
   * steady-state micro-batch pays one 1-row generation probe on
   * `s21_lex_meta`; only a changed generation pays the full index
   * reload (the old per-batch `ensureLexIndex` walk — 4 table
@@ -86,8 +86,8 @@ class StreamLexRefreshSpec extends SparkSpec {
     // ONE continuous stream, one file per micro-batch; after batch 0
     // lands, the "nightly" s22 append stamps generation 2 — the
     // stream is never stopped
-    val pqCache = new Similarity.PqIndexCache(spark)
-    val lexCache = new Similarity.LexIndexCache(spark)
+    val pqCache = Similarity.pqCache(spark)
+    val lexCache = Similarity.lexCache(spark)
     val genUsed = scala.collection.concurrent.TrieMap.empty[Long, Long]
     val schema = spark.read.parquet(s"$input/00.parquet").schema
     val q = spark.readStream.schema(schema)
@@ -146,7 +146,7 @@ class StreamLexRefreshSpec extends SparkSpec {
       "unchanged generation keeps the SAME lex index object") {
     dropLexTables()
     Similarity.ensureLexIndex(spark, sf)
-    val cache = new Similarity.LexIndexCache(spark)
+    val cache = Similarity.lexCache(spark)
     val first = cache.current(spark)
     assert(cache.current(spark) eq first,
       "unchanged generation re-loaded the lexical index")
